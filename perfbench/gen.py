@@ -12,6 +12,9 @@ Everything the engine sees is derived from one integer seed, so the same
 * ``discovery_batch`` -- the batch of discovered URLs ``crawl_continuous``
   folds into its store before each epoch: new URLs, exact re-discoveries of
   known URLs and canonicalization twins of known URLs.
+* ``query_tables`` -- the star-schema, events, documents and embeddings
+  tables the headline queries read, at the row counts and value ranges of
+  the repository's sf0.01 test tables, written once per seed.
 """
 
 from __future__ import annotations
@@ -104,3 +107,145 @@ def discovery_batch(seed: int, batch_id: int, known_urls: list[str],
         "discovered_at": (BASE_TS + pd.to_timedelta(seq % 86_400, unit="s"))
         .astype("datetime64[us, UTC]"),
     })
+
+
+# -- headline-query tables ------------------------------------------------------
+
+QUERY_ROWS = dict(customer=1_500, supplier=100, part=2_000, orders=15_000,
+                  lineitem=60_000, events=10_000, documents=500,
+                  embeddings=500)
+REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
+SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
+PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
+PART_ADJ = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
+PART_NOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod",
+             "widget"]
+PART_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
+EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
+VOCAB = ("a agg batch big column customer data fast filter group hash join "
+         "key line merge order part query row scan slow small sort spark "
+         "stream table the value vector window").split()
+LANGS, LANG_P = ["en", "de", "es", "fr", "zh"], [.44, .14, .14, .14, .14]
+EMBED_DIM = 64
+
+
+def _days(rng, start: str, end: str, n: int) -> np.ndarray:
+    lo, hi = pd.Timestamp(start), pd.Timestamp(end)
+    days = rng.randint(0, (hi - lo).days + 1, size=n)
+    return (lo + pd.to_timedelta(days, unit="D")).values.astype("M8[us]")
+
+
+def _money(rng, lo: float, hi: float, n: int) -> np.ndarray:
+    return rng.randint(int(lo * 100), int(hi * 100) + 1, size=n) / 100.0
+
+
+def _documents(rng, n: int) -> pd.DataFrame:
+    """Random texts over ``VOCAB``; ~5% are an earlier text plus " dup"."""
+    texts: list[str] = []
+    for _ in range(n):
+        if texts and rng.uniform() < 0.05:
+            texts.append(texts[int(rng.randint(len(texts)))] + " dup")
+        else:
+            k = int(rng.randint(10, 100))
+            texts.append(" ".join(VOCAB[i] for i in
+                                  rng.randint(len(VOCAB), size=k)))
+    ids = np.arange(n, dtype=np.int64)
+    return pd.DataFrame({
+        "doc_id": ids, "text": texts,
+        "lang": rng.choice(LANGS, size=n, p=LANG_P),
+        "source": [f"src{i % 20}" for i in ids],
+        "n_chars": np.array([len(t) for t in texts], dtype=np.int64)})
+
+
+def _query_frames(seed: int) -> dict[str, pd.DataFrame]:
+    rng = np.random.RandomState(seed % (2 ** 32))
+    n = QUERY_ROWS
+    i32 = np.int32
+    out = {
+        "region": pd.DataFrame({"r_regionkey": np.arange(5, dtype=i32),
+                                "r_name": REGIONS}),
+        "nation": pd.DataFrame({
+            "n_nationkey": np.arange(25, dtype=i32),
+            "n_name": [f"NATION_{i}" for i in range(25)],
+            "n_regionkey": (np.arange(25) % 5).astype(i32)}),
+    }
+    keys = np.arange(n["customer"], dtype=np.int64)
+    out["customer"] = pd.DataFrame({
+        "c_custkey": keys, "c_name": [f"Customer#{k:09d}" for k in keys],
+        "c_nationkey": rng.randint(0, 25, size=len(keys)).astype(i32),
+        "c_acctbal": _money(rng, -999.99, 9999.99, len(keys)),
+        "c_mktsegment": rng.choice(SEGMENTS, size=len(keys))})
+    keys = np.arange(n["supplier"], dtype=np.int64)
+    out["supplier"] = pd.DataFrame({
+        "s_suppkey": keys, "s_name": [f"Supplier#{k:09d}" for k in keys],
+        "s_nationkey": rng.randint(0, 25, size=len(keys)).astype(i32),
+        "s_acctbal": _money(rng, -999.99, 9999.99, len(keys))})
+    keys = np.arange(n["part"], dtype=np.int64)
+    out["part"] = pd.DataFrame({
+        "p_partkey": keys,
+        "p_name": [f"{PART_ADJ[a]} {PART_NOUN[b]}" for a, b in
+                   rng.randint(0, 8, size=(len(keys), 2))],
+        "p_brand": [f"Brand#{b}" for b in rng.randint(1, 26, size=len(keys))],
+        "p_type": rng.choice(PART_TYPES, size=len(keys)),
+        "p_size": rng.randint(1, 51, size=len(keys)).astype(i32),
+        "p_retailprice": np.round(900 + (keys % 1000) / 10, 1)})
+    keys = np.arange(n["orders"], dtype=np.int64)
+    out["orders"] = pd.DataFrame({
+        "o_orderkey": keys,
+        "o_custkey": rng.randint(0, n["customer"], size=len(keys))
+        .astype(np.int64),
+        "o_orderstatus": rng.choice(["F", "O", "P"], size=len(keys)),
+        "o_totalprice": _money(rng, 1000, 500000, len(keys)),
+        "o_orderdate": _days(rng, "1995-01-01", "2001-08-01", len(keys)),
+        "o_orderpriority": rng.choice(PRIORITIES, size=len(keys))})
+    m = n["lineitem"]
+    out["lineitem"] = pd.DataFrame({
+        "l_orderkey": rng.randint(0, n["orders"], size=m).astype(np.int64),
+        "l_partkey": rng.randint(0, n["part"], size=m).astype(np.int64),
+        "l_suppkey": rng.randint(0, n["supplier"], size=m).astype(np.int64),
+        "l_linenumber": rng.randint(1, 8, size=m).astype(i32),
+        "l_quantity": rng.randint(1, 51, size=m).astype(np.float64),
+        "l_extendedprice": _money(rng, 900, 105000, m),
+        "l_discount": rng.randint(0, 11, size=m) / 100.0,
+        "l_tax": rng.randint(0, 9, size=m) / 100.0,
+        "l_returnflag": rng.choice(["A", "N", "R"], size=m),
+        "l_linestatus": rng.choice(["F", "O"], size=m),
+        "l_shipdate": _days(rng, "1995-01-02", "2001-11-04", m)})
+    m = n["events"]
+    gaps = np.maximum(1, rng.exponential(259e6, size=m).astype(np.int64))
+    out["events"] = pd.DataFrame({
+        "event_id": np.arange(m, dtype=np.int64),
+        "ts": (np.datetime64("2024-01-01", "us")
+               + np.cumsum(gaps).astype("m8[us]")),
+        "user_id": rng.randint(0, n["customer"] // 10, size=m)
+        .astype(np.int64),
+        "event_type": rng.choice(EVENT_TYPES, size=m),
+        "value": np.maximum(0.01, np.round(rng.exponential(50, size=m), 2)),
+        "props": [f'{{"k": {k}}}' for k in rng.randint(0, 100, size=m)]})
+    out["documents"] = _documents(rng, n["documents"])
+    m = n["embeddings"]
+    vecs = rng.standard_normal((m, EMBED_DIM)).astype(np.float32)
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    out["embeddings"] = pd.DataFrame({
+        "vec_id": np.arange(m, dtype=np.int64), "embedding": list(vecs),
+        "label": rng.randint(0, 10, size=m).astype(i32)})
+    return out
+
+
+def query_tables(seed: int, cache_dir: str) -> str:
+    """Directory of ``<table>.parquet`` files at ``seed``, generated on first
+    use.  Timestamps are microsecond, time-zone-free, as in the test
+    tables."""
+    out = os.path.join(cache_dir, f"queries-s{seed}")
+    done = os.path.join(out, "_done")
+    if os.path.exists(done):
+        return out
+    os.makedirs(out, exist_ok=True)
+    for table, df in _query_frames(seed).items():
+        tab = pa.Table.from_pandas(df, preserve_index=False)
+        if table == "embeddings":
+            tab = tab.set_column(1, "embedding", pa.array(
+                df["embedding"].tolist(), pa.list_(pa.float32())))
+        pq.write_table(tab, os.path.join(out, f"{table}.parquet"))
+    open(done, "w").close()
+    return out

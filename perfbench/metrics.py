@@ -1,8 +1,10 @@
 """End-to-end and per-layer metrics, by name and unit.
 
 Every workload prints every metric; a layer a workload does not exercise
-reads 0 there.  Per-layer span metrics are totals over the measured loop
-divided by its operation count (crawl epochs or frontier jobs).
+reads 0 there.  Per-layer span metrics of the measured loop are totals
+divided by its operation count (crawl epochs or frontier jobs); those of
+the untimed passes after the loop (maintenance and TTL recrawl, headline
+queries) are totals.
 """
 
 from __future__ import annotations
@@ -16,8 +18,6 @@ def end_to_end(run, setup_s: float, peak_rss_mb: float) -> dict:
     return {
         "setup_s": (setup_s, "s"),
         "peak_rss_mb": (peak_rss_mb, "MB"),
-        "urls_per_s": (statistics.median(
-            u / w for u, w in zip(run.op_urls, run.op_walls)), "1/s"),
         "op_wall_s.p50": (statistics.median(run.op_walls), "s"),
     }
 
@@ -34,13 +34,16 @@ SPAN_STATS = {
     "tables.stage_pandas": _LOCAL,
     "tables.read": _LOCAL,
     "tables.commit": _LOCAL,
+    "streaming.ingest.fold_batch": _SPARK,
+    "bench.bench_frontier": _SPARK + ("gc_s", "tasks"),
+}
+# span name -> stats, totals over the passes after the loop
+PASS_STATS = {
     "tables.compact": _SPARK,
     "tables.compact_bucketed": _SPARK,
     "tables.vacuum": _LOCAL,
     "plans.crawler.maintain_store": _SPARK,
     "operators.recrawl.recrawl_pass": _SPARK,
-    "streaming.ingest.fold_batch": _SPARK,
-    "bench.bench_frontier": _SPARK + ("gc_s", "tasks"),
 }
 # run_epoch's direct children by kind: the epoch's split
 EPOCH_SPLIT = ("tables.stage", "tables.stage_pandas", "tables.read",
@@ -60,14 +63,25 @@ UNITS = {"wall_s": "s", "jobs": "count", "exec_cpu_s": "s",
          "shuffle_mb": "MB", "gc_s": "s", "tasks": "count"}
 
 
+def query_spans() -> list[str]:
+    """Span name per headline query: ``<module>.<key>``."""
+    import bench
+    from crawlspark.queries import QUERIES
+
+    return [f"{'queries' if k in QUERIES else 'textops'}.{k}"
+            for k in bench.HEADLINE]
+
+
 def per_layer_spec() -> list[tuple[str, str]]:
     """Every per-layer metric a traced run prints, as (name, unit)."""
     out = [(f"plans.crawler.init_run.{s}", UNITS[s]) for s in _SPARK]
-    for name, stats in SPAN_STATS.items():
+    for name, stats in (*SPAN_STATS.items(), *PASS_STATS.items()):
         out += [(f"{name}.{s}", UNITS[s]) for s in stats]
     for kind in EPOCH_SPLIT:
         out += [(f"plans.epoch.run_epoch.{kind}.wall_s", "s"),
                 (f"plans.epoch.run_epoch.{kind}.jobs", "count")]
+    for name in query_spans():
+        out += [(f"{name}.{s}", UNITS[s]) for s in _LOCAL]
     return out + list(EXTRA.items())
 
 
@@ -78,7 +92,9 @@ def _total(spans, stat):
 
 def per_layer(run, spark, store, cfg, tracer: Tracer) -> dict:
     spans = inclusive(tracer.spans)
-    setup, loop = spans[:tracer.loop_start], spans[tracer.loop_start:]
+    setup = spans[:tracer.loop_start]
+    loop = spans[tracer.loop_start:tracer.loop_end]
+    passes = spans[tracer.loop_end:] if tracer.loop_end is not None else []
     vals = {f"plans.crawler.init_run.{stat}": _total(
         [s for s in setup if s["name"] == "plans.crawler.init_run"], stat)
         for stat in _SPARK}
@@ -110,13 +126,18 @@ def per_layer(run, spark, store, cfg, tracer: Tracer) -> dict:
         r.n_admitted for r in run.results)
     per_op["plans.epoch.run_epoch.terminal"] = sum(
         r.n_terminal for r in run.results)
-    per_op["operators.recrawl.recrawl_pass.readmitted"] = sum(
-        s.get("readmitted", 0) for s in loop
-        if s["name"] == "operators.recrawl.recrawl_pass")
     per_op["tables.bytes_written_mb"] = tracer.loop_bytes / 2 ** 20
     per_op["trace.overhead_s"] = tracer.overhead_s
     n_ops = max(1, len(run.op_walls))
     vals.update({k: v / n_ops for k, v in per_op.items()})
+    for name, stats in (*PASS_STATS.items(),
+                        *((q, _LOCAL) for q in query_spans())):
+        chosen = [s for s in passes if s["name"] == name]
+        for stat in stats:
+            vals[f"{name}.{stat}"] = _total(chosen, stat)
+    vals["operators.recrawl.recrawl_pass.readmitted"] = sum(
+        s.get("readmitted", 0) for s in passes
+        if s["name"] == "operators.recrawl.recrawl_pass")
 
     vals["seen_filter.fpp_est"] = (seen_filter_fpp(spark, store, cfg)
                                    if store is not None else 0.0)

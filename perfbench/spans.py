@@ -50,9 +50,11 @@ class Tracer:
         self.spans: list[dict] = []
         self._stack: list[dict] = []
         self._patched: list[tuple] = []
-        self.loop_bytes = 0     # bytes staged since mark_loop()
+        self.loop_bytes = 0     # bytes staged in the measured loop
         self.loop_start = 0     # index of the measured loop's first span
-        self.overhead_s = 0.0   # time spent in the tracer's own code
+        self.loop_end = None    # index after its last span, once it ended
+        self.overhead_s = 0.0   # time the loop spent in the tracer's code
+        self._looping = False
 
     # -- spans ----------------------------------------------------------------
 
@@ -78,7 +80,7 @@ class Tracer:
         self._stack.append(span)
         self._set_group(span)
         span["start"] = time.perf_counter()
-        self.overhead_s += span["start"] - t_in
+        self._overhead(span["start"] - t_in)
         try:
             yield span
         finally:
@@ -86,14 +88,22 @@ class Tracer:
             span["end"] = t_out
             self._stack.pop()
             self._set_group(parent)
-            self.overhead_s += time.perf_counter() - t_out
+            self._overhead(time.perf_counter() - t_out)
+
+    def _overhead(self, seconds: float) -> None:
+        if self._looping:
+            self.overhead_s += seconds
 
     def mark_loop(self) -> None:
         """The measured loop starts: later spans, staged bytes and tracer
         overhead are its."""
-        self.loop_bytes = 0
-        self.overhead_s = 0.0
         self.loop_start = len(self.spans)
+        self._looping = True
+
+    def end_loop(self) -> None:
+        """The measured loop ends: later spans belong to untimed passes."""
+        self.loop_end = len(self.spans)
+        self._looping = False
 
     # -- patching -------------------------------------------------------------
 
@@ -116,6 +126,8 @@ class Tracer:
         return wrapper
 
     def _count_bytes(self, store, rels) -> None:
+        if not self._looping:
+            return
         t0 = time.perf_counter()
         for rel in rels or ():
             self.loop_bytes += os.path.getsize(os.path.join(store.root, rel))

@@ -6,11 +6,12 @@ then checks its outputs untimed.
 
 * ``crawl_continuous`` -- a small datagen store crawled at batch 50.  Each
   operation folds a discovery batch into the store (``fold_batch``) and runs
-  ``run_crawl(max_epochs=1)``; every third epoch is followed by table
-  maintenance and a TTL-recrawl pass.
+  ``run_crawl(max_epochs=1)``.  A traced run then runs table maintenance
+  and a TTL-recrawl pass once, untimed by the loop, and checks the pass.
 * ``frontier_1m`` -- the repository's north-metric frontier job,
   ``bench.bench_frontier``, imported unchanged and run over 1M lazily
-  generated URLs per operation.
+  generated URLs per operation.  A traced run then runs the headline
+  queries once, untimed by the loop, and checks them against DuckDB.
 """
 
 from __future__ import annotations
@@ -32,10 +33,10 @@ COUNTER_STATUS = {"ok": "ok", "invalid": "invalid_payload", "retry": "retry",
                   "denied": "robots_denied"}
 CURSOR_TAG = "perfbench-discovery"
 
-# the maintenance and TTL-recrawl cadences fire after every third epoch;
-# runs too short for three epochs measure the epoch loop without them
-CONTINUOUS_CFG = dict(batch_size=50, compact_every=3, recrawl_every=3,
-                      recrawl_ttl_epochs=2, recrawl_topk=100)
+CONTINUOUS_CFG = dict(batch_size=50)
+# the traced run's TTL pass: TTL 0 makes every URL crawled ok stale after
+# the one epoch a run holds (see check_recrawl)
+TTL_PASS_CFG = dict(recrawl_ttl_epochs=0, recrawl_topk=100)
 FRONTIER_URLS = 1_000_000
 FRONTIER_BATCH = 10_000
 WARMUP_JOBS = 2
@@ -52,7 +53,6 @@ class Run:
     failed: int = 0
     problems: list = field(default_factory=list)
     op_walls: list = field(default_factory=list)   # one per operation
-    op_urls: list = field(default_factory=list)    # URLs admitted or scheduled
     loop_wall: float = 0.0
     results: list = field(default_factory=list)    # EpochResult per epoch
     counters: list = field(default_factory=list)   # committed, per epoch
@@ -140,19 +140,34 @@ def crawl_continuous(run: Run, spark, tracer: Tracer, t_session: float):
         res = results[0]
         run.op_walls.append(fold[1] + wall)
         run.results.append(res)
-        run.op_urls.append(res.n_admitted)
         run.counters.append(dict(store.snapshot().meta.get("counters", {})))
+    tracer.end_loop()
+    if tracer.enabled and run.results:
+        maintenance_pass(spark, store, cfg, run.results[-1].epoch)
     tracer.uninstall()   # the checks below are not the program's work
     run.check(bool(run.results) and run.results[0].n_admitted > 0,
               "epoch 0 admitted no URL")
-    check_crawl(run, spark, store, cfg)
+    check_crawl(run, spark, store, ttl_pass=tracer.enabled)
     return setup_s, store
 
 
-def check_crawl(run: Run, spark, store, cfg) -> None:
+def maintenance_pass(spark, store, cfg, epoch: int) -> None:
+    """What ``run_crawl`` runs after an epoch when its ``compact_every`` and
+    ``recrawl_every`` cadences fire: ``maintain_store``, then a TTL
+    ``recrawl_pass`` (with ``TTL_PASS_CFG``).  Called through the crawler
+    module, so a traced run opens their spans."""
+    from dataclasses import replace
+
+    from crawlspark.plans import crawler
+
+    crawler.maintain_store(spark, store, cfg)
+    crawler.recrawl_pass(spark, store, replace(cfg, **TTL_PASS_CFG), epoch)
+
+
+def check_crawl(run: Run, spark, store, ttl_pass: bool) -> None:
     """Committed counters equal the crawl_log rows by status, url_seen keys
-    are unique, and no URL is terminal twice unless a recrawl pass that could
-    have forgotten it ran in between."""
+    are unique, no URL is terminal twice (no recrawl pass runs between
+    epochs) and, after a TTL pass, ``check_recrawl`` holds."""
     log = store.read(spark, "crawl_log")
     if not run.check(log is not None, "no crawl_log after the loop"):
         return
@@ -169,25 +184,27 @@ def check_crawl(run: Run, spark, store, cfg) -> None:
             if seen is not None else pd.Series(dtype="int64"))
     run.check(keys.is_unique, f"url_seen has {keys.duplicated().sum()} "
                               "duplicated url_hash keys")
-    terminal = (log[log["status"].isin(TERMINAL)]
-                .sort_values(["url_hash", "epoch"]))
-    bad = [(h, a, b) for h, g in terminal.groupby("url_hash") if len(g) > 1
-           for a, b in zip(g.to_dict("records"), g.to_dict("records")[1:])
-           if not _recrawl_between(cfg, a, b)]
-    run.check(not bad, f"{len(bad)} URLs terminal twice with no recrawl "
-                       f"pass between, e.g. {bad[:3]}")
+    twice = log[log["status"].isin(TERMINAL)].groupby("url_hash").size()
+    run.check(not (twice > 1).any(),
+              f"{int((twice > 1).sum())} URLs terminal twice, e.g. "
+              f"{twice[twice > 1].index[:3].tolist()}")
+    if ttl_pass:
+        check_recrawl(run, log, keys)
 
 
-def _recrawl_between(cfg, first, second) -> bool:
-    """Could a recrawl pass have forgotten a URL between its terminal crawl
-    ``first`` and ``second`` ((epoch, status) rows)?  Passes forget only
-    ok/invalid_payload URLs, and the pass after epoch p only those last
-    crawled at or before p - ttl."""
-    e1, e2 = first["epoch"], second["epoch"]
-    return (first["status"] in ("ok", "invalid_payload")
-            and bool(cfg.recrawl_every) and any(
-                (p + 1) % cfg.recrawl_every == 0
-                and e1 <= p - cfg.recrawl_ttl_epochs for p in range(e1, e2)))
+def check_recrawl(run: Run, log: pd.DataFrame, seen_keys: pd.Series) -> None:
+    """The TTL pass forgot the ``recrawl_topk`` (or all) URLs crawled ok.
+
+    With TTL 0 every URL with an ok/invalid_payload row is stale after the
+    last epoch, and each was in ``url_seen`` before the pass: it was
+    admitted, and no earlier pass forgot it."""
+    stale = set(log.loc[log["status"].isin(("ok", "invalid_payload")),
+                        "url_hash"])
+    forgotten = len(stale - set(seen_keys))
+    want = min(len(stale), TTL_PASS_CFG["recrawl_topk"])
+    run.check(want > 0 and forgotten == want,
+              f"TTL pass forgot {forgotten} of {len(stale)} stale URLs, "
+              f"expected {want}")
 
 
 # -- frontier_1m ------------------------------------------------------------------
@@ -218,13 +235,55 @@ def frontier(run: Run, spark, tracer: Tracer, t_session: float):
         if out is None:
             break
         run.op_walls.append(out[1])
-        run.op_urls.append(FRONTIER_URLS)
         # the admitted batch is counted after a dropDuplicates on url_hash,
         # so a full batch also proves the admitted keys are unique
         run.check(out[0]["n_admitted"] == FRONTIER_BATCH,
                   f"frontier job admitted {out[0]['n_admitted']} distinct "
                   f"URLs, expected {FRONTIER_BATCH}")
+    tracer.end_loop()
+    if tracer.enabled:
+        headline_queries(run, spark, tracer)
     return setup_s, None
+
+
+def headline_queries(run: Run, spark, tracer: Tracer) -> None:
+    """Each ``bench.HEADLINE`` query once into a noop sink, under a span
+    ``<module>.<key>`` (``queries`` or ``textops``), over seeded tables
+    shaped like the sf0.01 test tables; then, untraced, its rows against
+    the DuckDB ``oracle_sql()`` by ``tools/check_queries.value_hash``."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    import bench
+    from metrics import query_spans
+    from tools.check_queries import TABLES, value_hash
+
+    sf = gen.query_tables(run.seed, run.cache)
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{os.path.join(sf, t + '.parquet')}'")
+    for key, name in zip(bench.HEADLINE, query_spans()):
+        try:
+            with tracer.span(name):
+                qs[key](spark, sf).write.format("noop").mode(
+                    "overwrite").save()
+            df = qs[key](spark, sf)
+            cols, rows = df.columns, [tuple(r) for r in df.collect()]
+            res = con.execute(oracles[key]).fetch_arrow_table()
+        except Exception as exc:
+            run.attempted += 1
+            run.op_failed(f"query {key} raised {exc!r}")
+            continue
+        want = ([tuple(v) for v in zip(*(c.to_pylist() for c in res.columns))]
+                if res.num_rows else [])
+        run.check(sorted(cols) == sorted(res.schema.names)
+                  and value_hash(rows, cols) == value_hash(want,
+                                                           res.schema.names),
+                  f"query {key}: {len(rows)} Spark rows differ from the "
+                  f"DuckDB oracle's {len(want)}")
+    con.close()
 
 
 WORKLOADS = {"crawl_continuous": crawl_continuous, "frontier_1m": frontier}
